@@ -171,9 +171,9 @@ object Dedup {
     * it 4× (two size()s, the slice source, the short-doc fallback), and
     * HOFs are CodegenFallback — inline, every corpus-scale shingle pass
     * paid 4 split() calls per row (measured 3.5× on the 3-gram explode,
-    * graft.SplitBench; round-20 optimization, guide §1.2 "per-task
-    * work"). Same strings bit-for-bit: the lambda body is the old
-    * expression reading the bound value.
+    * OPTIMIZATION_r20.md; guide §1.2 "per-task work"). Same strings
+    * bit-for-bit: the lambda body is the old expression reading the
+    * bound value.
     */
   def shingles(text: Column, n: Int = 5): Column =
     ExprUtil.bindOnce(tokens(text), arr =>
@@ -182,29 +182,52 @@ object Dedup {
           i => concat_ws(" ", slice(arr, i, lit(n)))))
         .otherwise(array(concat_ws(" ", arr))))
 
-  /** k arithmetic minhashes per document over the *distinct shingle set*:
-    * ONE md5 per shingle (materialized as a column — not re-evaluated per
-    * hex digit), then k cheap affine permutations — the standard scalable
-    * construction (vs k salted digests, which costs k md5s per shingle).
-    * Returns one column per hash: mh0..mh{k-1}.
+  /** THE MinHash kernel: k affine minima per row over the row's
+    * *distinct shingle set*, as one array<bigint> column. ONE md5 per
+    * shingle — its first 12 hex digits mod P, the same VALUE as the
+    * oracle's engine-portable [[digestModSql]] via one native conv() —
+    * then ONE `aggregate` fold carrying all k running minima (`zip_with`
+    * against the literal (a, b) coefficient array), so each shingle hash
+    * is read once (the standard scalable construction, vs k salted
+    * digests = k md5s per shingle). Every signature and band key in this
+    * object comes from this column: [[bandKeysArray]] bands it per row
+    * (stateless, streaming-legal), [[minhashSignature]] min-merges it per
+    * id. Pinned by MinhashKernelSpec (golden digests + a plain-Scala
+    * recomputation).
+    */
+  def minhashMins(text: Column, k: Int, shingleN: Int = 5): Column = {
+    require(k <= MinhashA.size, s"at most ${MinhashA.size} hash functions")
+    val ab = array((0 until k).map(i =>
+      struct(lit(MinhashA(i)).as("a"), lit(MinhashB(i)).as("b"))): _*)
+    val hm = transform(array_distinct(shingles(text, shingleN)), s =>
+      conv(substring(md5(s), 1, 12), 16, 10).cast("long") % MinhashP)
+    // affine values lie in [0, P), so P seeds every running minimum safely
+    aggregate(hm, array_repeat(lit(MinhashP), k),
+      (acc, h) => zip_with(acc, ab, (m, c) =>
+        least(m, (h * c("a") + c("b")) % MinhashP)))
+  }
+
+  /** Band keys over a mins array: `bands` groups of `rowsPerBand`
+    * consecutive minima, each key = md5 of the ':'-joined group. */
+  def bandKeysOf(mins: Column, bands: Int, rowsPerBand: Int): Column =
+    array((0 until bands).map { b =>
+      md5(concat_ws(":", (b * rowsPerBand until (b + 1) * rowsPerBand)
+        .map(i => element_at(mins, i + 1)): _*))
+    }: _*)
+
+  /** k minhashes per `idCol` as columns mh0..mh{k-1}: the per-row
+    * [[minhashMins]], min-merged per id. Rows sharing an id merge into
+    * the signature of their shingle UNION (min-merge(sig(A), sig(B)) =
+    * sig(A ∪ B)). The mins column is referenced k times by the
+    * aggregate, so CollapseProject keeps it in its own projection and
+    * the kernel runs once per row.
     */
   def minhashSignature(docs: DataFrame, k: Int, textCol: String = "text",
       idCol: String = "doc_id", shingleN: Int = 5): DataFrame = {
-    require(k <= MinhashA.size, s"at most ${MinhashA.size} hash functions")
-    val tok = docs.select(col(idCol),
-      explode(array_distinct(shingles(col(textCol), shingleN))).as("tok"))
-    val withH = tok
-      .withColumn("md5h", md5(col("tok")))
-      // same VALUE as digestModSql (the oracle's engine-portable hex
-      // parse) via one native conv() instead of 12 instr/substr terms —
-      // this is the hottest expression in the dedup family (one per
-      // distinct shingle); equality of the two forms is pinned by the
-      // bandKeysArray == bandKeys∘minhashSignature spec
-      .withColumn("hm",
-        conv(substring(col("md5h"), 1, 12), 16, 10).cast("long") % MinhashP)
-    val aggs = (0 until k).map(i =>
-      min((col("hm") * lit(MinhashA(i)) + lit(MinhashB(i))) % lit(MinhashP)).as(s"mh$i"))
-    withH.groupBy(col(idCol)).agg(aggs.head, aggs.tail: _*)
+    val m = freshName(Seq(idCol), "_mins")
+    val aggs = (0 until k).map(i => min(element_at(col(m), i + 1)).as(s"mh$i"))
+    docs.select(col(idCol), minhashMins(col(textCol), k, shingleN).as(m))
+      .groupBy(col(idCol)).agg(aggs.head, aggs.tail: _*)
   }
 
   /** Group-level MinHash signature by MERGE: the elementwise min of the
@@ -310,90 +333,17 @@ object Dedup {
           .as("containment"))
   }
 
-  /** Band keys over a minhash signature: `bands` groups of `rowsPerBand`
-    * hashes, each band key = md5 of the ':'-joined mins.
-    */
-  def bandKeys(sig: DataFrame, bands: Int, rowsPerBand: Int): DataFrame =
-    (0 until bands).foldLeft(sig) { (d, b) =>
-      val cols = (b * rowsPerBand until (b + 1) * rowsPerBand).map(i => col(s"mh$i"))
-      d.withColumn(s"band$b", md5(concat_ws(":", cols: _*)))
-    }
-
-  /** Map-only per-row band keys: distinct shingles → one md5 each → k
-    * affine mins → banded md5 keys, ALL inside higher-order functions (no
-    * explode, no groupBy). Produces byte-identical keys to the
-    * explode/groupBy pipeline (bandKeys∘minhashSignature) — verified in
-    * ExtensionSpec — but as a STATELESS projection, so it composes with
-    * Structured Streaming before stream-static joins (streaming
-    * aggregations would forbid the downstream join). conv() replaces the
-    * engine-portable hex parser here: this form never meets the DuckDB
-    * oracle, the batch pipeline remains the oracle-checked one.
+  /** Map-only per-row band keys: [[minhashMins]] banded by
+    * [[bandKeysOf]], the mins array bound once ([[ExprUtil.bindOnce]])
+    * so the hash pass runs once per row. A STATELESS projection — no
+    * explode, no groupBy — so it composes with Structured Streaming
+    * before stream-static joins (streaming aggregations would forbid the
+    * downstream join).
     */
   def bandKeysArray(text: Column, bands: Int, rowsPerBand: Int,
-      shingleN: Int = 5): Column = {
-    val k = bands * rowsPerBand
-    require(k <= MinhashA.size, s"at most ${MinhashA.size} hash functions")
-    // STAGED inside the single Column (round-20; the withBandKeys
-    // discipline via ExprUtil.bindOnce): previously the per-shingle
-    // md5+mod pass was inlined into k separate
-    // array_min(transform(hm, ...)) copies — CodegenFallback HOFs with
-    // no CSE, so every row paid the digest pass k times (measured 26×
-    // at k=16, graft.SplitBench). Now ONE hash pass feeds ONE
-    // aggregate fold carrying all k running minima (zip_with against
-    // the broadcast-literal (a,b) coefficient array), and the band
-    // projection reads the bound mins array by position. Keys are
-    // byte-identical (same affine mins, same ':'-join) — the
-    // bandKeysArray == bandKeys∘minhashSignature spec still pins it.
-    val ab = array((0 until k).map(i =>
-      struct(lit(MinhashA(i)).as("a"), lit(MinhashB(i)).as("b"))): _*)
-    val hm = transform(array_distinct(shingles(text, shingleN)), s =>
-      conv(substring(md5(s), 1, 12), 16, 10).cast("long") % MinhashP)
-    val mins = aggregate(hm, array_repeat(lit(MinhashP), k),
-      (acc, h) => zip_with(acc, ab, (m, c) =>
-        least(m, (h * c("a") + c("b")) % MinhashP)))
-    ExprUtil.bindOnce(mins, m =>
-      array((0 until bands).map { b =>
-        md5(concat_ws(":", (b * rowsPerBand until (b + 1) * rowsPerBand)
-          .map(i => element_at(m, i + 1)): _*))
-      }: _*))
-  }
-
-  /** Append an `out` band-key-array column via STAGED projections. Same
-    * keys as [[bandKeysArray]], but the expensive per-shingle md5+mod pass
-    * is bound to its own intermediate column: the k min-permutations then
-    * collapse into ONE `aggregate` fold over that array (each shingle hash
-    * is read once, folded into all k running minima via `zip_with`), and
-    * the band keys read the mins array by position. In the single-Column
-    * form, Catalyst inlines the shingle-hash subtree into every one of the
-    * k `array_min(transform(...))` copies — higher-order functions sit
-    * outside whole-stage codegen, so no subexpression elimination rescues
-    * it and each row pays k× the md5 work. Here `CollapseProject` keeps a
-    * Project boundary below the mins stage only where an alias is
-    * non-cheap AND multiply-referenced, which is exactly the boundary that
-    * makes the hash pass evaluate once. Measured at sf0.1 this is the
-    * difference between x40 at ~80 s and ~10 s.
-    */
-  def withBandKeys(df: DataFrame, textCol: String, out: String,
-      bands: Int, rowsPerBand: Int, shingleN: Int = 5): DataFrame = {
-    val k = bands * rowsPerBand
-    require(k <= MinhashA.size, s"at most ${MinhashA.size} hash functions")
-    val hmCol = freshName(df.columns.toSeq :+ out, out + "_hm")
-    val mhCol = freshName(df.columns.toSeq :+ out, out + "_mh")
-    val hm = transform(array_distinct(shingles(col(textCol), shingleN)),
-      s => conv(substring(md5(s), 1, 12), 16, 10).cast("long") % MinhashP)
-    val ab = array((0 until k).map(i =>
-      struct(lit(MinhashA(i)).as("a"), lit(MinhashB(i)).as("b"))): _*)
-    // affine values lie in [0, P), so P seeds every running minimum safely
-    val mins = aggregate(col(hmCol), array_repeat(lit(MinhashP), k),
-      (acc, h) => zip_with(acc, ab, (m, c) =>
-        least(m, (h * c("a") + c("b")) % MinhashP)))
-    val bks = array((0 until bands).map { b =>
-      md5(concat_ws(":", (b * rowsPerBand until (b + 1) * rowsPerBand)
-        .map(i => element_at(col(mhCol), i + 1)): _*))
-    }: _*)
-    df.withColumn(hmCol, hm).withColumn(mhCol, mins).withColumn(out, bks)
-      .drop(hmCol, mhCol)
-  }
+      shingleN: Int = 5): Column =
+    ExprUtil.bindOnce(minhashMins(text, bands * rowsPerBand, shingleN),
+      bandKeysOf(_, bands, rowsPerBand))
 
   /** A column name not present in `taken` (temp-column collision guard). */
   private def freshName(taken: Seq[String], base: String): String =
@@ -456,28 +406,15 @@ object Dedup {
   }
 
   /** The corpus's distinct band-key set — the distilled dedup state a
-    * streaming ingest filter holds against (bands·docs short rows).
-    *
-    * Uses the CODEGEN explode/groupBy signature route (the measured-faster
-    * batch path — PLANS.md's negative result on the HOF form), keyed by
-    * md5(text) instead of a document id: rows with identical text merge
-    * into one signature computation (identical shingle sets — harmless
-    * for a DISTINCT key set, and it dedups the corpus's exact dups for
-    * free), rows with different texts never collide, and the key is a
-    * deterministic function of the row (no synthetic-id recomputation
-    * hazard). Only the batch side may aggregate — the per-row
-    * [[withBandKeys]]/[[bandKeysArray]] forms remain the streaming path.
+    * streaming ingest filter holds against (bands·docs short rows):
+    * every row's [[bandKeysArray]] keys, exploded and de-duplicated.
+    * Band keys are a pure function of the text, so exact-dup rows add
+    * nothing to the set.
     */
   def corpusBandKeys(docs: DataFrame, bands: Int, rowsPerBand: Int,
-      textCol: String = "text"): DataFrame = {
-    val h = freshName(docs.columns.toSeq, "_cbh")
-    val sig = bandKeys(
-      minhashSignature(docs.select(md5(col(textCol)).as(h), col(textCol)),
-        bands * rowsPerBand, textCol, h),
-      bands, rowsPerBand)
-    sig.select(explode(array((0 until bands).map(b => col(s"band$b")): _*)).as("bk"))
+      textCol: String = "text"): DataFrame =
+    docs.select(explode(bandKeysArray(col(textCol), bands, rowsPerBand)).as("bk"))
       .distinct()
-  }
 
   /** Batch corpus merge (the daily-crawl ingest step): keep only new
     * documents that are neither exact duplicates (md5) nor near-duplicates
@@ -515,7 +452,6 @@ object Dedup {
       rowsPerBand: Int = Pipeline.DefaultRowsPerBand,
       textCol: String = "text", idCol: String = "doc_id"): DataFrame = {
     val h = freshName(newDocs.columns.toSeq, "_h")
-    val bksCol = freshName(newDocs.columns.toSeq :+ h, "_bks")
     val bkCol = freshName(newDocs.columns.toSeq :+ h, "_bk")
     val exactKeys = corpus.select(md5(col(textCol)).as(h + "_c")).distinct()
     val corpusKeys = corpusBandKeys(corpus, bands, rowsPerBand, textCol)
@@ -523,9 +459,9 @@ object Dedup {
     val fresh = newDocs
       .withColumn(h, md5(col(textCol)))
       .join(exactKeys, col(h) <=> col(h + "_c"), "left_anti")
-    val matched = withBandKeys(fresh.select(col(idCol), col(h), col(textCol)),
-        textCol, bksCol, bands, rowsPerBand)
-      .select(col(idCol).as("_mid"), col(h).as("_mh"), explode(col(bksCol)).as(bkCol))
+    val matched = fresh
+      .select(col(idCol).as("_mid"), col(h).as("_mh"),
+        explode(bandKeysArray(col(textCol), bands, rowsPerBand)).as(bkCol))
       .join(corpusKeys, Seq(bkCol), "left_semi")
       .select(col("_mid"), col("_mh")).distinct()
     corpus.unionByName(
@@ -665,21 +601,15 @@ object Dedup {
         expr(s"CASE WHEN m > $maxBucket THEN m - 1 " +
           "ELSE m * (m - 1) DIV 2 END * n_buckets").as("n_emitted_pairs"))
 
-  /** Stacked (id, band id, band key) rows, MAP-ONLY (round 20): the
-    * per-row [[bandKeysArray]] ladder replaces the explode/groupBy
-    * signature route, which shuffled every per-shingle hash row through
-    * the groupBy(id) exchange — a full corpus-scale shuffle at 100 TB
-    * — before the band keys even existed. Post-bindOnce the HOF ladder
-    * costs the same hash work with ZERO exchange (graft.SigBench:
-    * byte-identical stacked rows, 1.2–1.9 s explode/groupBy vs
-    * 1.3–1.5 s map-only at sf0.1 — a local wash, a structural shuffle
-    * removal at scale; the early-round negative result on the HOF form
-    * predates bindOnce, which removed the k× duplicated hash pass that
-    * made it lose).
+  /** Stacked (id, band id, band key) rows, MAP-ONLY: the per-row
+    * [[bandKeysArray]] keys, with no groupBy(id) exchange of per-shingle
+    * hash rows ahead of them (OPTIMIZATION_r20.md §5: byte-identical
+    * stacked rows, a local wash at sf0.1, a corpus-scale shuffle removed
+    * at 100 TB).
     *
-    * PRECONDITION: `idCol` unique per row (every caller feeds a
-    * primary-key id). The groupBy route MERGED duplicate-id rows into
-    * one signature; the per-row ladder signs each row independently.
+    * Duplicate ids: every caller feeds a primary-key id; rows sharing an
+    * id are signed each on its own (MinhashKernelSpec pins it), unlike
+    * [[minhashSignature]], which min-merges them.
     */
   private def stackedBandKeys(docs: DataFrame, bands: Int, rowsPerBand: Int,
       textCol: String, idCol: String): DataFrame =
@@ -909,6 +839,7 @@ object Dedup {
     *
     * Scale shape: the signature frame is computed ONCE and materialized
     * ([[Checkpoints.materialize]]) — it feeds band-key pair generation
+    * ([[bandKeysOf]] over its mh columns, stacked by one posexplode)
     * AND the per-pair agreement count without re-running the per-shingle
     * md5 pass (the x54 backbone rule). Exact Jaccard tokenizes only
     * semi-joined pair members (the [[verifiedCandidatePairs]] prune) —
@@ -921,10 +852,9 @@ object Dedup {
     val k = bands * rowsPerBand
     val sig = Checkpoints.materialize(
       minhashSignature(docs, k, textCol, idCol, shingleN))
-    val banded = bandKeys(sig, bands, rowsPerBand)
-    val stacked = (0 until bands).map(b =>
-        banded.select(col(idCol), lit(b).as("_bid"), col(s"band$b").as("_bk")))
-      .reduce(_.union(_))
+    val stacked = sig.select(col(idCol), posexplode(bandKeysOf(
+        array((0 until k).map(i => col(s"mh$i")): _*), bands, rowsPerBand))
+      .as(Seq("_bid", "_bk")))
     val pairs = stacked.alias("a").join(stacked.alias("b"),
         col("a._bid") === col("b._bid") && col("a._bk") === col("b._bk") &&
           col(s"a.$idCol") < col(s"b.$idCol"))
@@ -982,14 +912,13 @@ object Dedup {
     * ([[graft.streaming.StreamingWindows.streamingVerifiedNearDupFilter]])
     * joins against: `bands` rows per distinct corpus text, the text
     * riding along so candidate verification is a scalar expression at the
-    * join site (no second lookup). Distinct-text keyed like
-    * [[corpusBandKeys]] (exact dups merge; ~bands·|distinct texts| rows —
-    * heavier than the bare key set by the token column, the price of
-    * precision). Uses the CODEGEN explode/groupBy signature route like
-    * [[corpusBandKeys]] (the measured-faster batch path — PLANS.md's
-    * negative result on the HOF form), keyed by the text digest, with
-    * one digest-keyed join to carry the verification payload back onto
-    * its band rows.
+    * join site (no second lookup). One row per distinct (text, band
+    * key): texts are de-duplicated first (exact dups merge;
+    * ~bands·|distinct texts| rows — heavier than the bare key set by the
+    * token column, the price of precision), then each text's
+    * [[bandKeysArray]] keys and token set come off ONE map-only
+    * projection. A null text has no token set to verify against and
+    * holds no state rows.
     *
     * The payload is the DISTINCT TOKEN SET (`ctoks`), not the raw text:
     * the verification residual needs only the set, and pre-tokenizing
@@ -999,29 +928,13 @@ object Dedup {
     * tokenization is the quadratic-constant trap).
     */
   def corpusBandDocs(docs: DataFrame, bands: Int, rowsPerBand: Int,
-      textCol: String = "text"): DataFrame = {
-    val h = freshName(Seq("ctext", "bk"), "_cbh")
-    val withH = docs.select(col(textCol).as("ctext")).distinct()
-      .withColumn(h, md5(col("ctext")))
-    val sig = bandKeys(
-      minhashSignature(withH, bands * rowsPerBand, "ctext", h),
-      bands, rowsPerBand)
-    // DISTINCT on the narrow (digest, band key) pair BEFORE the text
-    // join (round-20, guide §2.3 "shuffle fewer bytes"): the previous
-    // post-join .distinct() exchanged and hash-compared (bk, ctoks)
-    // rows — the token ARRAY in every comparison — to drop the same
-    // duplicates the 64-char digest pair identifies. One row per
-    // distinct (text, band key) either way wherever texts' token sets
-    // differ; two distinct texts sharing both token set and band key
-    // now keep one state row each (identical verification verdicts —
-    // the reject set is unchanged, and nothing oracle-checked reads
-    // this state's row multiset).
-    sig.select(col(h),
-        explode(array((0 until bands).map(b => col(s"band$b")): _*)).as("bk"))
+      textCol: String = "text"): DataFrame =
+    docs.select(col(textCol).as("ctext")).filter(col("ctext").isNotNull)
       .distinct()
-      .join(withH, h)
-      .select(col("bk"), array_distinct(tokens(col("ctext"))).as("ctoks"))
-  }
+      .select(
+        explode(array_distinct(bandKeysArray(col("ctext"), bands, rowsPerBand)))
+          .as("bk"),
+        array_distinct(tokens(col("ctext"))).as("ctoks"))
 
   /** The corpus-scale stage of [[sourceOverlapMatrix]], lazily — the
     * plan-inspectable form PlanSpec pins (the eager materialize above
@@ -1461,7 +1374,7 @@ object Dedup {
     require(nBits <= 32, "simhash uses md5 hex nibbles; <=32 bits supported here")
     // stage the digest in its own projection (CollapseProject keeps a
     // non-cheap multiply-referenced alias) so all nBits sums share ONE
-    // md5 per token — the withBandKeys restage lesson applied here
+    // md5 per token (the staged-projection discipline of ExprUtil)
     val tok = docs.select(col(idCol), explode(tokens(col(textCol))).as("tok"))
       .withColumn("_d", md5(col("tok")))
     val sums = (0 until nBits).map(j =>

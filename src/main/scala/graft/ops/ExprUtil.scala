@@ -14,15 +14,15 @@ import org.apache.spark.sql.functions._
   * the subtree becomes the input of a single-element higher-order
   * `transform`, whose lambda variable is evaluated once and then read —
   * not recomputed — by every reference in the body. This is the
-  * expression-level twin of the staged-projection discipline
-  * ([[Dedup.withBandKeys]]'s multiply-referenced non-cheap alias, which
-  * CollapseProject keeps as a Project boundary): projections stage
-  * DataFrame columns, `bindOnce` stages subtrees where only a single
-  * Column is allowed (scalar predicates, streaming-legal stateless
-  * projections, nested HOF ladders).
+  * expression-level twin of the staged-projection discipline (a
+  * multiply-referenced non-cheap alias, which CollapseProject keeps as a
+  * Project boundary — [[Dedup.minhashSignature]]'s mins column):
+  * projections stage DataFrame columns, `bindOnce` stages subtrees
+  * where only a single Column is allowed (scalar predicates,
+  * streaming-legal stateless projections, nested HOF ladders).
   *
-  * Measured (graft.SplitBench, sf0.1, local[32], interleaved noop-sink
-  * A/B, round 20): 3-gram shingle explode 1.5-2.1 s → 0.4-0.6 s (the
+  * Measured (OPTIMIZATION_r20.md, sf0.1, local[32], interleaved
+  * noop-sink A/B): 3-gram shingle explode 1.5-2.1 s → 0.4-0.6 s (the
   * tree referenced the split 4×); the 16-hash band-key ladder
   * 25.6-28.2 s → 1.1 s (k inlined copies of the per-shingle md5 pass
   * → one); qualityExpr filter 0.16-0.27 → 0.14-0.20 s.

@@ -396,8 +396,8 @@ object Packing {
     require(window >= 1 && divisor >= 1, "window and divisor must be >= 1")
     // one native conv() per position (the minhash fast-path lesson —
     // digestModSql's portable 8-term parse would inline md5 8×); value
-    // equality of conv vs the oracle's hex parse is the spec-pinned
-    // bandKeys identity
+    // equality of conv vs the oracle's hex parse is pinned by the minhash
+    // oracle queries (x03, x85, x91)
     val h = s"CAST(conv(substring(md5(concat_ws(' ', " +
       s"slice(_a, i - ${window - 1} + 1, $window))), 1, 8), 16, 10) AS BIGINT)"
     val staged = docs

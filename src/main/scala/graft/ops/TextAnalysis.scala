@@ -33,7 +33,7 @@ object TextAnalysis {
     * aggregation, no state). The token array is bound once
     * ([[ExprUtil.bindOnce]]): the filter() HOF makes the whole predicate
     * CodegenFallback, and the inline tree referenced the split 4× per
-    * row (round-20; measured in graft.SplitBench). Same doubles —
+    * row (measured in OPTIMIZATION_r20.md). Same doubles —
     * the body is the old expression over the bound value. */
   def qualityExpr(text: Column): Column =
     ExprUtil.bindOnce(tokens(text), toks => {

@@ -522,19 +522,6 @@ class ExtensionSpec extends SparkSuite {
     } finally org.apache.spark.GraftTestBridge.clearCheckpointDir(spark.sparkContext)
   }
 
-  test("map-only bandKeysArray == explode/groupBy band keys (stream-form parity)") {
-    val docs = Tables.documents(spark, "/root/testdata/sf0.001").limit(100)
-    val viaArray = docs
-      .select(col("doc_id"), explode(Dedup.bandKeysArray(col("text"), 2, 4)).as("bk"))
-      .collect().map(r => (r.getLong(0), r.getString(1))).toSet
-    val sig = Dedup.bandKeys(Dedup.minhashSignature(docs, 8), 2, 4)
-    val viaBatch = sig
-      .select(col("doc_id"), col("band0"), col("band1"))
-      .collect().flatMap(r => Seq((r.getLong(0), r.getString(1)), (r.getLong(0), r.getString(2))))
-      .toSet
-    assert(viaArray == viaBatch)
-  }
-
   test("stacked batch verified reject == chained per-band anti-joins " +
       "(round-20: the one-join batch twin keeps the chain's reject set)") {
     val dir = "/root/testdata/sf0.001"

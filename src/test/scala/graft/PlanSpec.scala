@@ -202,6 +202,16 @@ class PlanSpec extends SparkSuite {
       "expected an equi hash/sort-merge join on band keys:\n" + plan.take(3000))
   }
 
+  test("minhashSignature runs the MinHash kernel ONCE per row: the mins " +
+      "column stays in its own projection below the k per-id min aggregates") {
+    // HOFs get no common-subexpression elimination, so a kernel inlined
+    // into each of the k aggregates would pay the hash pass k times
+    val plan = graft.ops.Dedup.minhashSignature(Tables.documents(spark, dir), 8)
+      .queryExecution.executedPlan.toString
+    assert("zip_with\\(".r.findAllIn(plan).size == 1,
+      "the mins kernel was inlined into the aggregates:\n" + plan.take(3000))
+  }
+
   test("curation backbone is materialized: the final pipeline stage plans " +
       "ZERO scans of the corpus input (round-6 verdict #1)") {
     // Before the fix, `clean`'s plan inlined `deduped` twice (contamination

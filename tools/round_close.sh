@@ -2,38 +2,45 @@
 # The pre-snapshot gate as ONE command (round-14 lesson: the mechanical
 # specs only protect the round if they are executed AFTER the last query
 # lands and BEFORE the snapshot commit). Runs, in order:
-#   1. sbt test                 — full ScalaTest suite (conventions, plans,
+#   1. tools/test_tools.py      — bench-gate tools self-test
+#   2. sbt test                 — full ScalaTest suite (conventions, plans,
 #                                 cache hygiene, recall gates, goldens)
-#   2. graft.Verify @ sf0.01    — every query dumped to parquet
-#   3. tools/check.py           — bitwise DuckDB oracle compare
-#   4. graft.Bench @ sf0.001    — bench surface smoke (JSON line parses)
-#   5. graft.Bench @ sf0.1      — per-query quiescent regression gate vs
+#   3. graft.Verify @ sf0.01    — every query dumped to parquet
+#   4. tools/check.py           — bitwise DuckDB oracle compare
+#   5. perfbench/test_smoke.py  — every benchmark workload on sf0.001, its
+#                                 pinned curation/append outputs checked
+#   6. graft.Bench @ sf0.001    — bench surface smoke (JSON line parses)
+#   7. graft.Bench @ sf0.1      — per-query quiescent regression gate vs
 #                                 the committed BENCH_LOCAL.json
 #                                 (DEFAULT-ON; GRAFT_SKIP_SF01=1 skips —
 #                                 dev loops only, never the pre-snapshot run)
+#   8. tools/time_oracle.py     — sf0.1 per-query DuckDB pair (with step 7)
 # Exits non-zero on the first failure. Usage: tools/round_close.sh
 set -euo pipefail
 cd "$(dirname "$0")/.."
 
-echo "== [0/5] bench-gate tools self-test =="
+echo "== [1/8] bench-gate tools self-test =="
 python3 tools/test_tools.py
 
-echo "== [1/4] sbt test =="
+echo "== [2/8] sbt test =="
 sbt -batch test
 
-echo "== [2/4] graft.Verify sf0.01 =="
+echo "== [3/8] graft.Verify sf0.01 =="
 OUT=$(mktemp -d /tmp/graft_round_close.XXXX)
 trap 'rm -rf "$OUT"' EXIT
 sbt -batch "runMain graft.Verify /root/testdata/sf0.01 $OUT"
 
-echo "== [3/4] DuckDB oracle compare =="
+echo "== [4/8] DuckDB oracle compare =="
 # one run, captured: the grep reads the capture (check.py is the gate's
 # slowest step — round-15 advice: don't pay it twice / don't re-race it)
 CHECK_OUT=$(python3 tools/check.py /root/testdata/sf0.01 "$OUT" || true)
 echo "$CHECK_OUT" | tail -3
 echo "$CHECK_OUT" | grep -q " 0 failed" || { echo "ORACLE MISMATCH"; exit 1; }
 
-echo "== [4/4] bench smoke sf0.001 =="
+echo "== [5/8] benchmark smoke (perfbench pinned outputs) =="
+python3 perfbench/test_smoke.py
+
+echo "== [6/8] bench smoke sf0.001 =="
 SPARK_GRAFT_SF_DIR=/root/testdata/sf0.001 \
   SPARK_GRAFT_BENCH_OUT="$OUT/bench.json" \
   sbt -batch "runMain graft.Bench" >/dev/null 2>&1
@@ -55,7 +62,7 @@ print(f'bench ok: {len(d[\"queries\"])} queries, wall {d[\"wall\"]:.1f}s')"
 # at the gated SF can. Escape hatch (quick dev loops ONLY, never the
 # pre-snapshot run): GRAFT_SKIP_SF01=1.
 if [ "${GRAFT_SKIP_SF01:-0}" != "1" ]; then
-  echo "== [5/5] sf0.1 per-query regression gate =="
+  echo "== [7/8] sf0.1 per-query regression gate =="
   if git cat-file -e HEAD:BENCH_LOCAL.json 2>/dev/null; then
     git show HEAD:BENCH_LOCAL.json > /tmp/bench_local_baseline.json
   else
@@ -107,12 +114,12 @@ if [ "${GRAFT_SKIP_SF01:-0}" != "1" ]; then
   # SQLs at the GATED SF and commit the per-query DuckDB map next to
   # BENCH_LOCAL.json, so the Spark/DuckDB per-query ratio table the
   # judge computed by hand is a standing, diffable artifact
-  echo "== [6/6] sf0.1 per-query oracle pair (ORACLE_TIMES.json) =="
+  echo "== [8/8] sf0.1 per-query oracle pair (ORACLE_TIMES.json) =="
   python3 tools/time_oracle.py /root/testdata/sf0.1 "$OUT" 5
   cp "$OUT/oracle_times.json" ORACLE_TIMES.json
   python3 tools/oracle_ratio.py BENCH_LOCAL.json ORACLE_TIMES.json
 else
-  echo "== [5/5] sf0.1 regression gate SKIPPED (GRAFT_SKIP_SF01=1) =="
+  echo "== [7/8, 8/8] sf0.1 regression gate and oracle pair SKIPPED (GRAFT_SKIP_SF01=1) =="
 fi
 
 # optional sf1 pair (GRAFT_SF1=1): refresh BENCH_sf1.json on the CURRENT
